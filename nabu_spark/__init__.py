@@ -18,3 +18,10 @@ training-data-pipeline operators (dedup, similarity search, text analysis).
 """
 
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle a nabu UDF; from then
+# on the worker's per-task importlib.invalidate_caches() stops re-reading
+# unchanged zip archives (pyspark.zip) — see _zipcache.
+from . import _zipcache
+
+_zipcache.install()

@@ -279,7 +279,7 @@ def _dispatch(args) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     if args.cmd == "harvest":
-        from .operators.stats import crawl_stats
+        from .operators.stats import crawl_stats, crawl_totals
         from .pipeline import run_extract_stage
         from .telemetry import maybe_span
 
@@ -297,15 +297,11 @@ def _dispatch(args) -> int:
         with maybe_span("harvest.stats") as stat_span:
             stats = crawl_stats(docs)
             stats.write.mode("overwrite").json(os.path.join(args.out, "stats"))
-            summary = stats.agg(
-                F.sum("sites_in_sitemap").alias("sites"),
-                F.sum("successful_sites").alias("ok"),
-                F.sum("crawl_failures").alias("failed"),
-            ).first()
+            summary = crawl_totals(docs).first()
             if stat_span is not None:
-                stat_span.set_attribute("sites", int(summary["sites"] or 0))
-                stat_span.set_attribute("ok", int(summary["ok"] or 0))
-                stat_span.set_attribute("failed", int(summary["failed"] or 0))
+                stat_span.set_attribute("sites", int(summary["sites"]))
+                stat_span.set_attribute("ok", int(summary["ok"]))
+                stat_span.set_attribute("failed", int(summary["failed"]))
         print(json.dumps({"cmd": "harvest", "sites": summary["sites"], "ok": summary["ok"], "failed": summary["failed"]}))
         # reference exit code 3 when any sitemap had failures (main.go:248-258)
         return 3 if summary["failed"] else 0

@@ -13,7 +13,7 @@ Reference semantics (studied, not copied):
     skips unchanged releases (s3/client.go:286-318).
 
 All line construction is JVM-side (concat_ws); only the byte summation uses
-an Arrow-vectorized UDF (numpy reduction per batch).
+an Arrow UDF (numpy reduction over each batch's string buffers).
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 MASK64 = (1 << 64) - 1
@@ -50,20 +51,33 @@ def with_release_name(quads: DataFrame) -> DataFrame:
     )
 
 
-def _utf8_bytesum_fn(texts: pd.Series) -> pd.Series:
+def _utf8_bytesum_fn(texts: pa.Array) -> pa.Array:
     """Sum of UTF-8 byte VALUES per string — the reference's order-agnostic
-    hash kernel (hash.go:29-51 sums the bytes of each object's content)."""
-    out = np.empty(len(texts), dtype=np.int64)
-    for i, s in enumerate(texts):
-        b = (s or "").encode("utf-8")
-        out[i] = int(np.frombuffer(b, dtype=np.uint8).sum())
-    return pd.Series(out)
+    hash kernel (hash.go:29-51 sums the bytes of each object's content).
+    Null strings sum to 0. Reads the StringArray's buffers directly: one
+    cumulative sum over the batch's bytes, differenced at the offsets."""
+    n = len(texts)
+    if n == 0:  # an empty array may carry an empty offsets buffer
+        return pa.array([], type=pa.int64())
+    offset_type = np.dtype(np.int64 if pa.types.is_large_string(texts.type) else np.int32)
+    offsets_buf, data_buf = texts.buffers()[1:3]
+    offsets = np.frombuffer(
+        offsets_buf, dtype=offset_type, count=n + 1, offset=texts.offset * offset_type.itemsize
+    ).astype(np.int64)
+    first, last = int(offsets[0]), int(offsets[-1])
+    data = np.frombuffer(data_buf, dtype=np.uint8, count=last - first, offset=first)
+    csum = np.zeros(len(data) + 1, dtype=np.int64)
+    np.cumsum(data, dtype=np.int64, out=csum[1:])
+    sums = csum[offsets[1:] - first] - csum[offsets[:-1] - first]
+    if texts.null_count:
+        sums[texts.is_null().to_numpy(zero_copy_only=False)] = 0
+    return pa.array(sums, type=pa.int64())
 
 
 def utf8_bytesum(col):
     """Arrow-vectorized UTF-8 byte-value sum column (the real kernel; also
     used by the driver-contract ``bytesum`` query)."""
-    return F.pandas_udf(_utf8_bytesum_fn, "long")(col)
+    return F.arrow_udf(_utf8_bytesum_fn, "long")(col)
 
 
 def _line_bytesum(col):

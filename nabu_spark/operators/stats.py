@@ -21,15 +21,29 @@ WARNING_CAP = 20
 CIRCUIT_BREAKER_THRESHOLD = 20
 
 
+def _crawl_counts(sites: str, ok: str, failed: str) -> list:
+    """Aggregates counting all docs, successes (empty error_code) and
+    failures (non-empty error_code)."""
+    return [
+        F.count("*").alias(sites),
+        F.count(F.when(F.col("error_code") == "", 1)).alias(ok),
+        F.count(F.when(F.col("error_code") != "", 1)).alias(failed),
+    ]
+
+
+def crawl_totals(docs: DataFrame) -> DataFrame:
+    """One row (sites, ok, failed): :func:`crawl_stats`' counts summed over
+    every sitemap, aggregated straight from ``docs`` without its groupBy."""
+    return docs.agg(*_crawl_counts("sites", "ok", "failed"))
+
+
 def crawl_stats(docs: DataFrame, *, group_col: str = "sitemap_id") -> DataFrame:
     """Per-sitemap crawl report: sites in sitemap, successes, failures,
     capped failure list, dataset_down flag."""
     return (
         docs.groupBy(group_col)
         .agg(
-            F.count("*").alias("sites_in_sitemap"),
-            F.count(F.when(F.col("error_code") == "", 1)).alias("successful_sites"),
-            F.count(F.when(F.col("error_code") != "", 1)).alias("crawl_failures"),
+            *_crawl_counts("sites_in_sitemap", "successful_sites", "crawl_failures"),
             F.slice(
                 F.sort_array(
                     F.collect_list(

@@ -5,6 +5,7 @@ BENCH runs)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -43,7 +44,18 @@ def test_cli_lifecycle(spark, tmp_path):
     payload = json.loads([l for l in out.splitlines() if l.startswith("{")][-1])
     assert payload["sites"] == 80
     # reference semantics: exit 3 when any site failed (the generator plants some)
-    assert rc == (3 if payload["failed"] else 0)
+    assert payload["failed"] > 0 and rc == 3
+    # the summary line equals the per-sitemap stats it wrote, summed
+    stats = []
+    for f in glob.glob(os.path.join(run_dir, "stats", "*.json")):
+        with open(f) as fh:
+            stats.extend(json.loads(line) for line in fh if line.strip())
+    assert stats
+    assert (payload["sites"], payload["ok"], payload["failed"]) == (
+        sum(s["sites_in_sitemap"] for s in stats),
+        sum(s["successful_sites"] for s in stats),
+        sum(s["crawl_failures"] for s in stats),
+    )
 
     rc, out = run_cli(
         ["release", "--docs", run_dir, "--out", run_dir, "--mainstems", str(tmp_path / "mainstems")]

@@ -38,6 +38,20 @@ def corpus(spark):
     return pages, docs, quads
 
 
+def _bytesum_texts(n: int) -> list:
+    """ASCII, multi-byte (2/3/4-byte UTF-8), empty and null strings."""
+    pieces = ["abc", "ü", "日本", "🌊", "", " .\n", '"x"@en']
+    return [
+        None if i % 11 == 0 else "".join(pieces[(i + k) % len(pieces)] for k in range(i % 9))
+        for i in range(n)
+    ]
+
+
+def _per_row_bytesum(texts: list) -> list:
+    """The per-row definition the Arrow kernel replaced."""
+    return [sum((s or "").encode("utf-8")) for s in texts]
+
+
 class TestRelease:
     def test_release_routing(self, spark, corpus):
         _, _, quads = corpus
@@ -107,6 +121,29 @@ class TestRelease:
         for name in r1:
             assert r1[name] == sorted(r1[name])  # canonical order
             assert r1[name] == r2[name]  # byte-deterministic across layouts
+
+    def test_utf8_bytesum_kernel_matches_per_row_definition(self):
+        import pyarrow as pa
+
+        from nabu_spark.operators.release import _utf8_bytesum_fn
+
+        texts = _bytesum_texts(5000)
+        for typ in (pa.string(), pa.large_string()):
+            arr = pa.array(texts, type=typ)
+            assert _utf8_bytesum_fn(arr).to_pylist() == _per_row_bytesum(texts)
+            for start, length in [(0, 0), (1, 4096), (4097, 903), (4999, 1), (2500, 0)]:
+                got = _utf8_bytesum_fn(arr.slice(start, length)).to_pylist()
+                assert got == _per_row_bytesum(texts[start:start + length]), (typ, start)
+        assert _utf8_bytesum_fn(pa.array([None, None], pa.string())).to_pylist() == [0, 0]
+
+    def test_utf8_bytesum_column_spans_arrow_batches(self, spark):
+        from nabu_spark.operators.release import utf8_bytesum
+
+        texts = _bytesum_texts(9000)  # > 2 batches of maxRecordsPerBatch=4096
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
+        rows = df.select("i", utf8_bytesum(F.col("t")).alias("s")).collect()
+        got = [r["s"] for r in sorted(rows, key=lambda r: r["i"])]
+        assert got == _per_row_bytesum(texts)
 
     def test_pull_skip(self, spark):
         cur = spark.createDataFrame(
